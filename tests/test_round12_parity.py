@@ -204,14 +204,14 @@ def test_doremi_base_cache_cold_warm_parity(spark):
     a cache-hit run (local-relation base) reproduces the cache-miss
     run's weights bit-for-bit (the iteration arithmetic is shared —
     _doremi_iterate — and base rows round-trip exactly)."""
+    from velox_hadoop_spark.catalog import read_table
     from velox_hadoop_spark.operators.llmops9 import (
         _DOREMI_BASE_CACHE,
-        _docs,
         doremi_weight_frames,
     )
 
     sf = "/root/testdata/sf0.001"
-    docs = _docs(spark, sf)
+    docs = read_table(spark, sf, "documents")
     _DOREMI_BASE_CACHE.clear()
     _, wh_cold = doremi_weight_frames(docs, sf_dir=sf)
     cold = {r.source: r.w2 for r in wh_cold[-1].collect()}

@@ -18,11 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 ORDER_STATUSES = ("F", "O", "P")
@@ -65,7 +62,7 @@ def pivot_status_counts(orders: DataFrame) -> DataFrame:
 )
 def q_pivot_orders_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order counts pivoted to one column per order status."""
-    return pivot_status_counts(_t(spark, sf_dir, "orders"))
+    return pivot_status_counts(read_table(spark, sf_dir, "orders"))
 
 
 def unpivot_measures(li: DataFrame) -> DataFrame:
@@ -94,7 +91,7 @@ def unpivot_measures(li: DataFrame) -> DataFrame:
 )
 def q_unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lineitem measures melted long (3 rows per input row, no shuffle)."""
-    return unpivot_measures(_t(spark, sf_dir, "lineitem"))
+    return unpivot_measures(read_table(spark, sf_dir, "lineitem"))
 
 
 # Identical SQL text runs in both engines (same pattern as
