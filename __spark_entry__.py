@@ -41,19 +41,11 @@ def _verified_names() -> set[str]:
     return green
 
 
-# Front-of-queue rows within the never-verified group (entries already
-# driver-green are skipped automatically). Round 9: empty — r8 left no
-# backlog (every registry query carries a current green row), so the
-# never-verified group is exactly this round's registrations plus the
-# two perpetual rows-only approx_* rows.
-_BOOST = ()
-
-
 # Driver-green rows whose underlying code or oracle changed AFTER the
-# green row was recorded. They re-enter the verification queue right
-# behind the never-verified boost group so the driver refreshes their
-# evidence. Round 10's 13 names all re-greened in CORRECTNESS_r10 and
-# were dropped; repopulated with round 11's semantic/oracle rewrites:
+# green row was recorded. They lead the verification queue so the
+# driver refreshes their evidence. Round 10's 13 names all re-greened
+# in CORRECTNESS_r10 and were dropped; repopulated with round 11's
+# semantic/oracle rewrites:
 _REVERIFY = (
     # ROUND-14 riders (optimization round 2) — value-neutral PLAN
     # rewrites to green rows, all re-gated identical against the
@@ -106,33 +98,22 @@ _REVERIFY_TAIL = (
 )
 
 
-_DEFER = ()
-
-
 def _priority_order(names: list[str]) -> list[str]:
-    """Never-verified queries first (backlog rows boosted to the very
-    front, stale-evidence rows re-queued right behind them, this
-    round's new registrations after those, registration order
-    preserved otherwise) so the driver's per-round verification budget
-    lands on the queries that have waited longest for a current green
-    CORRECTNESS row."""
+    """Stale-evidence rows first, then never-verified queries, then the
+    hardened-kernel riders, then the green rest (registration order
+    preserved within each group) so the driver's per-round verification
+    budget lands on the queries that have waited longest for a current
+    green CORRECTNESS row."""
     green = _verified_names()
-    unverified = [n for n in names if n not in green]
-    boosted = [n for n in _BOOST if n in unverified]
     reverify = [n for n in _REVERIFY if n in names]
+    unverified = [n for n in names if n not in green and n not in _REVERIFY]
     reverify_tail = [n for n in _REVERIFY_TAIL if n in names]
-    deferred = [n for n in unverified if n in _DEFER]
-    rest = [
-        n
-        for n in unverified
-        if n not in _BOOST and n not in _DEFER and n not in _REVERIFY
-    ]
     tail = [
         n
         for n in names
         if n in green and n not in _REVERIFY and n not in _REVERIFY_TAIL
     ]
-    return boosted + reverify + rest + deferred + reverify_tail + tail
+    return reverify + unverified + reverify_tail + tail
 
 
 def _utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:

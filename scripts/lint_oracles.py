@@ -36,13 +36,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from velox_hadoop_spark.catalog import TABLES  # noqa: E402
 from velox_hadoop_spark.plans import registry  # noqa: E402
 
-BAD_TYPES = ("hugeint", "int128", "decimal128(38, 0)", "decimal128(38,0)")
-
-# Nested Arrow types whose Python values are unhashable to the driver's
-# pandas sort_values canonicalizer (see module docstring, class 2).
-# Prefix match would miss Arrow's fixed_size_list (DuckDB fixed-length
-# ARRAY) and large_list spellings — match anywhere in the type string.
-NESTED_TYPES = ("list", "struct", "map")
+# Classes 1 and 2 share their type lists with register()'s lint gate.
+# Nested types match anywhere in the type string: a prefix match would
+# miss Arrow's fixed_size_list (DuckDB fixed-length ARRAY) and
+# large_list spellings.
+from velox_hadoop_spark.plans.registry import (  # noqa: E402
+    _BAD_ORACLE_TYPES as BAD_TYPES,
+    _NESTED_ORACLE_TYPES as NESTED_TYPES,
+)
 
 # Class 3 (round 10): a DIRECT double sum of a money column inside the
 # oracle — `ROUND(sum(<money col or money expr>), n)` — is the

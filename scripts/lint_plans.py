@@ -49,8 +49,8 @@ GLOBAL_BOUNDED = {"nation", "region"}
 # cardinality-bounded — NOT SF-proportional — at 100 TB).
 WHITELIST = {
     ("operators/agg.py", "bounds"): (1, "percentile bounds: one scalar row"),
-    ("operators/sqlbreadth3.py", "tot"): (1, "one scalar total row"),
-    ("operators/timeseries4.py", "b"): (1, "daily (rev, count) spine: calendar-bounded (one row per date)"),
+    ("operators/sqlbreadth.py", "tot"): (1, "one scalar total row"),
+    ("operators/timeseries.py", "b"): (2, "daily (rev, count) spine: calendar-bounded (one row per date) [1]; daily revenue spine: calendar-bounded (one row per date) [1]"),
     ("operators/clustering.py", "cents"): (1, "k centroid rows (k is a parameter)"),
     ("operators/contamination.py", "n_docs"): (1, "one scalar count row"),
     ("operators/contamination.py", "sa"): (1, "per-language shingle stats; lang domain is enum-bounded"),
@@ -60,7 +60,7 @@ WHITELIST = {
     ("operators/dedup.py", "hot"): (1, "over-cap hot keys: bounded by |rows| / cap (< 0.2% of key rows at cap = 512); the drop_hot_keys OOM guard"),
     ("operators/graph.py", "df"): (1, "probe-guarded: broadcast only when n_rows <= BFS_BROADCAST_NODES"),
     ("operators/join.py", "dim"): (1, "API contract: caller declares the frame a broadcast dimension"),
-    ("operators/join2.py", "mins"): (1, "per-nationkey min: bounded by the 25-row nation domain"),
+    ("operators/join.py", "mins"): (1, "per-nationkey min: bounded by the 25-row nation domain"),
     ("operators/llmops2.py", "tot"): (1, "one scalar total row"),
     ("operators/mining.py", "season"): (1, "per-day-of-week stats: 7 rows"),
     ("operators/mining.py", "anchor"): (1, "one scalar max-date row"),
@@ -78,20 +78,19 @@ WHITELIST = {
     ("operators/quality.py", "rm"): (1, "per-quality-band rates: fixed band count"),
     ("operators/quality.py", "cm"): (1, "per-quality-band rates: fixed band count"),
     ("operators/quality.py", "bounds"): (1, "quantile bounds: one scalar row"),
-    ("operators/reshape2.py", "n_row"): (1, "one scalar count row"),
+    ("operators/reshape.py", "n_row"): (1, "one scalar count row"),
     ("operators/llmops8.py", "leak"): (1, "one scalar leakage-audit row"),
     ("operators/llmops8.py", "vocab"): (1, "top-V vocabulary: V fixed by the tokenizer (16 here), never SF-proportional"),
     ("operators/llmops8.py", "n"): (1, "one scalar count row"),
     ("operators/llmops8.py", "da"): (1, "per-dimension sums: d rows (64)"),
     ("operators/llmops8.py", "db"): (1, "per-dimension sums: d rows (64)"),
-    ("operators/timeseries5.py", "b"): (1, "daily revenue spine: calendar-bounded (one row per date)"),
-    ("operators/timeseries5.py", "t"): (1, "one scalar totals row"),
-    ("operators/timeseries5.py", "ssb"): (1, "one scalar between-group-sum row"),
+    ("operators/timeseries.py", "t"): (1, "one scalar totals row"),
+    ("operators/timeseries.py", "ssb"): (1, "one scalar between-group-sum row"),
     ("operators/skew.py", "tot"): (1, "one scalar totals row"),
     ("operators/llmops8.py", "ml"): (1, "per-label margins: label domain is enum-bounded"),
     ("operators/llmops8.py", "t"): (1, "one scalar count row"),
     ("operators/llmops8.py", "chi"): (1, "one scalar chi-squared row"),
-    ("operators/reshape2.py", "md"): (1, "per-o_orderstatus medians: 3-value enum key"),
+    ("operators/reshape.py", "md"): (1, "per-o_orderstatus medians: 3-value enum key"),
     ("operators/retrieval.py", "stats"): (2, "collection stats: one scalar row (BM25 + TF-IDF)"),
     ("operators/retrieval.py", "idf"): (1, "one row per QUERY term (constant query bag), not per corpus term"),
     ("operators/retrieval.py", "active"): (1, "top_k-capped user set (active_cap rows)"),
@@ -121,7 +120,7 @@ WHITELIST = {
     ("operators/sqlbreadth.py", "n_ea"): (1, "one scalar count row"),
     ("operators/sqlbreadth.py", "n_i"): (1, "one scalar count row"),
     ("operators/sqlbreadth.py", "n_e"): (1, "one scalar count row"),
-    ("operators/timeseries3.py", "g"): (1, "one scalar global-max row"),
+    ("operators/timeseries.py", "g"): (1, "one scalar global-max row"),
     ("operators/llmops3.py", "n"): (1, "one scalar count row (doc_quality_deciles n_total)"),
     ("operators/llmops4.py", "n"): (2, "one scalar count row each (decile_lift n_total, vocab_growth max_doc)"),
     ("operators/llmops4.py", "tot"): (2, "one scalar totals row each (decile_lift, context_window_budget)"),

@@ -44,18 +44,12 @@ WHITELIST = {
     "operators/llmops4.py": (3, "decile / token-bucket / context-budget grids: fixed bucket counts"),
     "operators/llmops9.py": (1, "re-assignment rank AFTER limit(REASSIGN_N): literal-bounded 25-row frame"),
     "operators/mining.py": (1, "hour-of-day spine: 24 rows"),
-    "operators/retrieval2.py": (1, "vocab-domain token rank; the r <= ZIPF_TOP filter compiles to WindowGroupLimit top-N; 10x-probed at 1.0x"),
+    "operators/retrieval.py": (1, "vocab-domain token rank; the r <= ZIPF_TOP filter compiles to WindowGroupLimit top-N; 10x-probed at 1.0x"),
     "operators/skyline.py": (1, "partition-id offsets: one row per partition"),
     "operators/sort.py": (1, "partition-id offsets: one row per partition (the single-exchange rank kernel)"),
-    "operators/sqlbreadth2.py": (1, "daily spine: calendar-bounded"),
-    "operators/sqlbreadth3.py": (1, "quarter spine: calendar-bounded"),
-    "operators/stats2.py": (8, "daily spine (7) + distinct-value rank domain (1, Mann-Whitney — 10x-probed)"),
-    "operators/stats3.py": (1, "distinct-value rank domain (Kruskal-Wallis), 10x-probed at 1.5x"),
-    "operators/stats4.py": (3, "daily spine: calendar-bounded (runs test, Grubbs argmax, permutation patterns)"),
-    "operators/timeseries2.py": (1, "daily spine: calendar-bounded"),
-    "operators/timeseries3.py": (1, "session-length bucket grid: fixed bucket count"),
-    "operators/timeseries4.py": (4, "daily spine (2) + anchored day-offset OLS range (1): calendar-bounded; distinct-gap-second cumulative sum (1): value-domain, grows with distinct observed gaps not rows"),
-    "operators/timeseries5.py": (5, "daily spine / day-cost argmin / day-offset z-score range: calendar-bounded"),
+    "operators/sqlbreadth.py": (2, "daily spine: calendar-bounded [1]; quarter spine: calendar-bounded [1]"),
+    "operators/stats.py": (12, "daily spine (7) + distinct-value rank domain (1, Mann-Whitney — 10x-probed) [8]; distinct-value rank domain (Kruskal-Wallis), 10x-probed at 1.5x [1]; daily spine: calendar-bounded (runs test, Grubbs argmax, permutation patterns) [3]"),
+    "operators/timeseries.py": (11, "daily spine: calendar-bounded [1]; session-length bucket grid: fixed bucket count [1]; daily spine (2) + anchored day-offset OLS range (1): calendar-bounded; distinct-gap-second cumulative sum (1): value-domain, grows with distinct observed gaps not rows [4]; daily spine / day-cost argmin / day-offset z-score range: calendar-bounded [5]"),
     "operators/window.py": (1, "year-month spine: calendar-bounded"),
 }
 

@@ -2,14 +2,15 @@
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.join(_REPO, "scripts"))
 
 # Registration-time oracle lint: under pytest every @register() call
 # schema-probes its oracle against DuckDB, so an offending output shape
@@ -19,6 +20,10 @@ os.environ.setdefault("VHS_ORACLE_LINT", "1")
 
 from velox_hadoop_spark.session import get_spark  # noqa: E402
 from velox_hadoop_spark.catalog import TABLES  # noqa: E402
+
+# The one parity canonicalizer: the local gate's, which follows the
+# driver (a top-level list or dict cell raises instead of being tupled).
+from local_gate import _multiset as rows_to_multiset  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -36,25 +41,6 @@ def duck():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     yield con
     con.close()
-
-
-def _canon(v):
-    """Canonicalize a cell for order-insensitive comparison."""
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.9g}"
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    return v
-
-
-def rows_to_multiset(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    # sort by repr: mixed None/str/num cells aren't directly comparable
-    return sorted(
-        (tuple(_canon(row[i]) for i in idx) for row in rows), key=repr
-    ), [cols[i] for i in idx]
 
 
 def assert_parity(spark, duck, name: str, sf_dir: str = SF_DIR):

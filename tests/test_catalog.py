@@ -5,6 +5,7 @@ from __future__ import annotations
 import ast
 import os
 import pathlib
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -174,5 +175,41 @@ def test_catalog_tables_are_read_only_through_read_table():
         for p in sorted(PKG.rglob("*.py"))
         if p.name != "catalog.py" or p.parent != PKG
         for line in _raw_catalog_reads(p.read_text())
+    ]
+    assert not offenders, offenders
+
+
+def _numbered_continuations(names: set[str]) -> list[str]:
+    """``X<n>.py`` module names that sit beside an ``X.py``."""
+    out = []
+    for name in sorted(names):
+        m = re.fullmatch(r"(\w*?\D)\d+\.py", name)
+        if m and f"{m[1]}.py" in names:
+            out.append(name)
+    return out
+
+
+_LATE_ORACLE = re.compile(r"attach_oracle|\bspecs\(\)")
+
+
+def test_operator_module_guards_see_offenders():
+    assert _numbered_continuations({"stats.py", "stats2.py", "llmops3.py", "x.py"}) == ["stats2.py"]
+    assert _numbered_continuations({"llmops2.py", "llmops3.py"}) == []
+    assert _LATE_ORACLE.search("attach_oracle('q', sql)")
+    assert _LATE_ORACLE.search('est = specs()["q"].oracle')
+    assert not _LATE_ORACLE.search("def q_specs_report(spark, sf_dir):")
+
+
+def test_operator_modules_are_one_per_domain():
+    """No numbered continuation module beside its base module, and every
+    oracle arrives through @register (no late binding, no registry
+    lookup while the registry is still loading)."""
+    ops = PKG / "operators"
+    assert not _numbered_continuations({p.name for p in ops.glob("*.py")})
+    offenders = [
+        f"{p.name}:{i}"
+        for p in sorted(ops.glob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if _LATE_ORACLE.search(line)
     ]
     assert not offenders, offenders

@@ -46,3 +46,21 @@ def test_oracle_parity(spark, duck, name):
     # loud if a rename ever breaks that, rather than silently smoking
     assert registry.specs()[name].oracle is not None
     assert_parity(spark, duck, name)
+
+
+def test_assert_parity_rejects_top_level_array_column(spark, duck, monkeypatch):
+    """The local parity check is as strict as the driver's gate: a
+    top-level array cell fails it even when both engines agree, because
+    the driver's canonicalizer cannot sort list values."""
+    name = "parity_probe_array_column"
+
+    def fn(spark_, sf_dir):
+        return spark_.createDataFrame([(1, [1, 2])], "k int, xs array<int>")
+
+    monkeypatch.setitem(
+        registry._REGISTRY,
+        name,
+        registry.QuerySpec(name=name, fn=fn, oracle="SELECT 1 AS k, [1, 2] AS xs"),
+    )
+    with pytest.raises(TypeError, match="top-level nested value"):
+        assert_parity(spark, duck, name)

@@ -81,10 +81,9 @@ def test_oracle_lint_no_hugeint_outputs():
 def test_priority_order_invariants():
     """Round-5+ driver-sample ordering contract:
 
-        boosted-unverified → _REVERIFY → unverified-rest → deferred →
-        green tail
+        _REVERIFY → unverified → _REVERIFY_TAIL → green tail
 
-    Every _BOOST/_REVERIFY/_DEFER name must exist in the registry (typo
+    Every _REVERIFY name must exist in the registry (typo
     guard); no never-verified query may follow the start of the green
     tail (rows-only queries never earn a hash-green row, so they count
     as unverified and correctly stay ahead of the tail); _REVERIFY
@@ -94,8 +93,6 @@ def test_priority_order_invariants():
 
     names = list(entry.queries())
     registered = set(names)
-    assert set(entry._BOOST) <= registered
-    assert set(entry._DEFER) <= registered
     assert set(entry._REVERIFY) <= registered
     green = entry._verified_names()
     tail_start = min(
@@ -116,23 +113,21 @@ def test_priority_order_invariants():
 
 
 def test_priority_order_unit():
-    """_priority_order on a synthetic name list: boost order preserved
-    up front, reverify right behind, remaining unverified names keep
-    registration order, deferred names sit at the back of the
-    unverified group, green names (minus reverify) close the queue in
-    registration order. Pure-function check, independent of round
-    state."""
+    """_priority_order on a synthetic name list: reverify up front,
+    unverified names keep registration order, green names (minus
+    reverify) close the queue in registration order. Pure-function
+    check, independent of round state."""
     import __spark_entry__ as entry
 
     names = ["g1", "u1", "b1", "g2", "d1", "u2", "b2", "r1"]
     green = {"g1", "g2", "r1"}
     orig_green = entry._verified_names
-    orig = entry._BOOST, entry._REVERIFY, entry._DEFER
+    orig = entry._REVERIFY
     entry._verified_names = lambda: green
-    entry._BOOST, entry._REVERIFY, entry._DEFER = ("b2", "b1"), ("r1",), ("d1",)
+    entry._REVERIFY = ("r1",)
     try:
         got = entry._priority_order(names)
     finally:
         entry._verified_names = orig_green
-        entry._BOOST, entry._REVERIFY, entry._DEFER = orig
-    assert got == ["b2", "b1", "r1", "u1", "u2", "d1", "g1", "g2"]
+        entry._REVERIFY = orig
+    assert got == ["r1", "u1", "b1", "d1", "u2", "b2", "g1", "g2"]

@@ -251,23 +251,19 @@ def test_banded_interval_join_boundary_cases(spark, tmp_path):
 
 
 def test_attach_oracle_unknown_name_and_lint_gate(monkeypatch):
-    """attach_oracle is the ONE public seam for late-bound oracles: an
-    unknown name must fail loudly (a typo would otherwise silently
-    leave the query rows-only), and the register()-identical lint gate
-    must reject a nested-type output shape when the lint env is on."""
+    """register() is the one way a query gets its oracle, so its lint
+    gate covers every oracle: with the lint env on, a nested-type
+    output shape fails at registration and nothing is registered."""
     from velox_hadoop_spark.plans import registry
 
     registry._ensure_loaded()
-    with pytest.raises(KeyError, match="unknown query name"):
-        registry.attach_oracle("no_such_query_xyz", "SELECT 1 AS one")
     monkeypatch.setenv(registry._LINT_ENV, "1")
-    before = registry._REGISTRY["wordcount"].oracle
-    try:
-        with pytest.raises(ValueError, match="nested type"):
-            registry.attach_oracle("wordcount", "SELECT [1, 2] AS xs")
-        assert registry._REGISTRY["wordcount"].oracle == before  # unchanged
-    finally:
-        registry.attach_oracle("wordcount", before)
+    name = "lint_gate_probe_nested_xyz"
+    with pytest.raises(ValueError, match="nested type"):
+        registry.register(name, oracle="SELECT [1, 2] AS xs")(
+            lambda spark, sf_dir: None
+        )
+    assert name not in registry._REGISTRY
 
 
 def test_lsh_candidate_pairs_extra_group_cols(spark):

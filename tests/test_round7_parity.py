@@ -243,7 +243,7 @@ def test_avg_rank_map_window_runs_over_distinct_value_domain(spark):
     distinct values × 2 partitions) must enter the window as exactly 20
     rows, and the pooled average ranks must equal the textbook
     tie-averaged ranks over the full row set."""
-    from velox_hadoop_spark.operators.stats2 import avg_rank_map
+    from velox_hadoop_spark.operators.stats import avg_rank_map
 
     rows = [("p%d" % (i % 2), float((i // 2) % 10)) for i in range(1000)]
     df = spark.createDataFrame(rows, "part string, v double")

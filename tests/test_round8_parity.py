@@ -40,7 +40,7 @@ def _daily_rev(sf=SF_SMALL):
 
 
 def test_macd_brute_force_recompute(spark):
-    from velox_hadoop_spark.operators.timeseries4 import (
+    from velox_hadoop_spark.operators.timeseries import (
         MACD_FAST,
         MACD_HORIZON,
         MACD_SIGNAL,
@@ -168,7 +168,7 @@ def test_decontam_span_merge_brute_force(spark):
     checks the hit-span query's extremes against the same ground
     truth."""
     from velox_hadoop_spark.operators.contamination import BENCH_SOURCE
-    from velox_hadoop_spark.operators.contamination2 import DECONTAM13_K as K
+    from velox_hadoop_spark.operators.contamination import DECONTAM13_K as K
 
     docs = duckdb.sql(
         f"SELECT doc_id, source, text FROM '{SF_SMALL}/documents.parquet'"
@@ -244,7 +244,7 @@ def test_epoch_sampling_brute_force(spark):
     overlap counters and both quota plans must match exactly (the hash
     formula is mirrored in the oracle, so parity alone can't catch a
     shared seeding mistake)."""
-    from velox_hadoop_spark.operators.dedup2 import (
+    from velox_hadoop_spark.operators.dedup import (
         EPOCH_PCT,
         EPOCH_SEEDS,
         QUOTA_PER_SOURCE,
@@ -319,7 +319,7 @@ def test_cross_snapshot_decay_keeper_invariants(spark):
     keeper SQL: Σ n_docs = corpus size, Σ n_kept = number of clusters,
     and for every cluster the keeper chosen by the Spark pipeline has
     the maximum decayed weight (tie → lowest id) among its members."""
-    from velox_hadoop_spark.operators.dedup2 import (
+    from velox_hadoop_spark.operators.dedup import (
         DECAY_MILLE,
         N_SNAPSHOTS,
         SNAP_SEED,
@@ -378,7 +378,7 @@ def test_intra_cluster_jaccard_brute_force(spark):
     shingle cap, the member cap, and the zero-overlap pairs the
     shared-shingle join must not drop."""
     from velox_hadoop_spark.operators.dedup import MAX_KEY_DOC_FREQ, SHINGLE_K
-    from velox_hadoop_spark.operators.dedup2 import (
+    from velox_hadoop_spark.operators.dedup import (
         CLUSTER_AUDIT_CAP,
         _cluster_labels,
     )
@@ -862,7 +862,7 @@ def test_yoy_quarter_growth_brute_force(spark):
 
 
 def test_brown_double_smoothing_brute_force(spark):
-    from velox_hadoop_spark.operators.timeseries4 import (
+    from velox_hadoop_spark.operators.timeseries import (
         BROWN_ALPHA,
         BROWN_K,
         MACD_HORIZON,
@@ -997,7 +997,7 @@ def test_time_to_convert_brute_force(spark):
 def test_cluster_source_span_consistency(spark):
     """Span rows agree with the audit's membership counts and the raw
     provenance columns (recomputed via the pipeline's own labels)."""
-    from velox_hadoop_spark.operators.dedup2 import _cluster_labels
+    from velox_hadoop_spark.operators.dedup import _cluster_labels
 
     labels = {
         r.doc_id: r.cluster_id for r in _cluster_labels(spark, SF_SMALL).collect()
@@ -1064,7 +1064,7 @@ def test_dedup_threshold_sweep_nesting(spark):
         registry.specs()["dedup_threshold_sweep"].fn(spark, SF_SMALL).collect(),
         key=lambda r: r.threshold,
     )
-    from velox_hadoop_spark.operators.dedup2 import SWEEP_THRESHOLDS
+    from velox_hadoop_spark.operators.dedup import SWEEP_THRESHOLDS
 
     assert [r.threshold for r in rows] == sorted(SWEEP_THRESHOLDS)
     for a, b in zip(rows, rows[1:]):
@@ -1077,7 +1077,7 @@ def test_dedup_threshold_sweep_nesting(spark):
 
 
 def test_rolling_ols_slope_brute_force(spark):
-    from velox_hadoop_spark.operators.timeseries4 import OLS_WINDOW_D
+    from velox_hadoop_spark.operators.timeseries import OLS_WINDOW_D
 
     daily = _daily_rev()
     pts = [((d - __import__("datetime").date(1970, 1, 1)).days, rc) for d, rc, _ in daily]
@@ -1135,7 +1135,7 @@ def test_snapshot_novelty_conservation(spark):
     cluster-level view must see each cluster first-seen EXACTLY once,
     and Σ n_docs = corpus size. Recomputed via the pipeline's own
     labels + plain-Python MD5 snapshots."""
-    from velox_hadoop_spark.operators.dedup2 import (
+    from velox_hadoop_spark.operators.dedup import (
         N_SNAPSHOTS,
         SNAP_SEED,
         _cluster_labels,
@@ -1194,7 +1194,7 @@ def test_trunc_ema_collect_list_frame_order(spark):
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from velox_hadoop_spark.operators.timeseries4 import (
+    from velox_hadoop_spark.operators.timeseries import (
         MACD_HORIZON,
         trunc_ema_ordered,
     )
@@ -1242,7 +1242,7 @@ def test_survivorship_golden_brute_force(spark):
     id), provenance mins, lineage counters — and conservation: each
     multi-member cluster emits exactly one golden row and singletons
     emit nothing."""
-    from velox_hadoop_spark.operators.dedup2 import _cluster_labels
+    from velox_hadoop_spark.operators.dedup import _cluster_labels
 
     labels = {
         r.doc_id: r.cluster_id for r in _cluster_labels(spark, SF_SMALL).collect()
@@ -1295,10 +1295,10 @@ def test_asof_tolerance_synthetic_semantics(spark):
     (real data rarely lands a pair exactly on the boundary)."""
     import datetime as dt
 
-    from velox_hadoop_spark.operators import timeseries4
+    from velox_hadoop_spark.operators import timeseries
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    s = timeseries4.ASOF_TOLERANCE_S
+    s = timeseries.ASOF_TOLERANCE_S
     rows = [
         (1, t0, 7, "click", 5.0, None),
         (2, t0 + dt.timedelta(seconds=s), 7, "purchase", 1.0, None),
@@ -1314,7 +1314,7 @@ def test_asof_tolerance_synthetic_semantics(spark):
         df.write.parquet(f"{tmp}/events.parquet")
         out = {
             r.event_id: r.click_value_10m
-            for r in timeseries4.q_asof_join_tolerance(spark, tmp).collect()
+            for r in timeseries.q_asof_join_tolerance(spark, tmp).collect()
         }
     assert out[2] == 5.0  # exactly at the bound: fresh
     assert out[3] is None  # one second stale: expired

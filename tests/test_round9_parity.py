@@ -637,7 +637,7 @@ def test_zipf_python_recompute(spark):
 
 
 def test_assortativity_python_recompute(spark):
-    from velox_hadoop_spark.operators.graph2 import co_supply_capped_edges
+    from velox_hadoop_spark.operators.graph import co_supply_capped_edges
     from pyspark.sql import functions as F
 
     li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")

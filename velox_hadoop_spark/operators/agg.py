@@ -480,7 +480,7 @@ def q_corr_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flag — the statistical-profiling aggregates, partial+final
     like any Tungsten agg (each partition keeps (n, Σx, Σy, Σxy, ...)
     moments; only moments merge at the shuffle)."""
-    from velox_hadoop_spark.operators.stats2 import safe_corr
+    from velox_hadoop_spark.operators.stats import safe_corr
 
     li = read_table(spark, sf_dir, "lineitem")
     # safe_corr, not F.corr: Spark 4's ANSI corr THROWS DIVIDE_BY_ZERO

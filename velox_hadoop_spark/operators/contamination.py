@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions import hashing as H
-from velox_hadoop_spark.operators.dedup import shingle_set
 from velox_hadoop_spark.functions.pairs import id_pairs
+from velox_hadoop_spark.operators.dedup import shingle_set
 from velox_hadoop_spark.plans.registry import register
 
 DECONTAM_K = 8          # benchmark n-gram length (words)
@@ -323,5 +323,268 @@ def q_cross_lang_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared")), 6
             ).alias("jaccard"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Decontamination operators.
+#
+# Industry-standard 13-gram benchmark decontamination (the n-gram length
+# the GPT-3/PaLM/Llama reports standardized on), extended past the
+# boolean flag the round-3 ``benchmark_decontamination`` (8-gram) query
+# gives: positioned hits with doc-level spans, merged contaminated-span
+# coverage (what fraction of each doc you would actually cut), and the
+# per-source removal-rate report a curation owner signs off on.
+#
+# Reference parity: the reference's regex-match pipeline
+# (Grep.java:62-100) is the same scan→match→aggregate shape; these
+# queries swap the regex for a broadcast benchmark n-gram set.
+# ---------------------------------------------------------------------------
+
+
+DECONTAM13_K = 13  # benchmark n-gram length (words) — the industry standard
+
+
+def positioned_shingles(docs: DataFrame, k: int = DECONTAM13_K) -> DataFrame:
+    """(doc_id, source, n_tokens, pos, g): every k-gram of the
+    whitespace token stream with its 1-based start position. Built
+    entirely from JVM array functions (split → transform/slice →
+    posexplode) — one narrow pass, no Python, no shuffle."""
+    w = docs.select(
+        "doc_id",
+        "source",
+        F.split(F.col("text"), r"\s+").alias("w"),
+    ).withColumn("n_tokens", F.size("w"))
+    return (
+        w.where(F.col("n_tokens") >= k)
+        .select(
+            "doc_id",
+            "source",
+            "n_tokens",
+            F.posexplode(
+                F.expr(
+                    f"transform(sequence(1, size(w) - {k - 1}),"
+                    f" i -> array_join(slice(w, i, {k}), ' '))"
+                )
+            ).alias("pos0", "g"),
+        )
+        .select(
+            "doc_id",
+            "source",
+            "n_tokens",
+            (F.col("pos0") + 1).alias("pos"),
+            "g",
+        )
+    )
+
+
+def _duck_positioned_shingles(k: int = DECONTAM13_K) -> str:
+    return f"""
+        w AS (
+            SELECT doc_id, source,
+                   string_split_regex(text, '\\s+') AS w
+            FROM documents
+        ),
+        sh AS (
+            SELECT doc_id, source, len(w) AS n_tokens, i AS pos,
+                   array_to_string(w[i:i+{k - 1}], ' ') AS g
+            FROM w CROSS JOIN UNNEST(generate_series(1, len(w) - {k - 1})) AS t(i)
+            WHERE len(w) >= {k}
+        ),
+        bench AS (
+            SELECT DISTINCT g FROM sh WHERE source = '{BENCH_SOURCE}'
+        ),
+        hits AS (
+            SELECT s.doc_id, s.n_tokens, s.pos, s.g
+            FROM sh s JOIN bench b USING (g)
+            WHERE s.source <> '{BENCH_SOURCE}'
+        )
+    """
+
+
+def contamination_hits(docs: DataFrame, k: int = DECONTAM13_K) -> DataFrame:
+    """Positioned benchmark k-gram hits in the training split:
+    (doc_id, n_tokens, pos, g). The deduped benchmark gram set is
+    broadcast (eval sets are small by definition — thousands of docs
+    against a 100 TB train corpus); the train side never shuffles for
+    the membership probe."""
+    sh = positioned_shingles(docs, k)
+    bench = (
+        sh.where(F.col("source") == BENCH_SOURCE).select("g").distinct()
+    )
+    # UNHINTED join: production eval sets are fixed-size and AQE
+    # broadcasts the gram set while it fits, but the stand-in benchmark
+    # source (src0) scales with SF here, so a forced F.broadcast would
+    # be an SF-proportional broadcast in this corpus — the class the
+    # round-6 de-broadcast pass removed. Let runtime stats decide.
+    return (
+        sh.where(F.col("source") != BENCH_SOURCE)
+        .join(bench, "g")
+        .select("doc_id", "n_tokens", "pos", "g")
+    )
+
+
+@register(
+    "decontam_13gram_hit_spans",
+    oracle=f"""
+        WITH {_duck_positioned_shingles()}
+        SELECT doc_id,
+               count(*) AS n_hits,
+               CAST(count(DISTINCT g) AS BIGINT) AS n_distinct_grams,
+               CAST(min(pos) AS BIGINT) AS first_hit_pos,
+               CAST(max(pos) AS BIGINT) AS last_hit_pos
+        FROM hits GROUP BY doc_id
+    """,
+    tags=("curation", "decontamination", "13-gram", "extension"),
+)
+def q_decontam_13gram_hit_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Doc-level 13-gram contamination spans: for every training doc
+    sharing at least one 13-gram with the eval set (source src0 stands
+    in), the hit count, distinct contaminated grams, and the first and
+    last hit positions — the evidence record a decontamination audit
+    stores, not just the boolean. One broadcast membership probe over
+    a single positioned-shingle pass; the grouped span aggregate runs
+    only on hit rows (a tiny fraction of the corpus by construction)."""
+    docs = read_table(spark, sf_dir, "documents")
+    return contamination_hits(docs).groupBy("doc_id").agg(
+        F.count("*").alias("n_hits"),
+        F.countDistinct("g").cast("long").alias("n_distinct_grams"),
+        F.min("pos").cast("long").alias("first_hit_pos"),
+        F.max("pos").cast("long").alias("last_hit_pos"),
+    )
+
+
+@register(
+    "decontam_span_coverage",
+    oracle=f"""
+        WITH {_duck_positioned_shingles()},
+        ordered AS (
+            SELECT doc_id, n_tokens, pos,
+                   CASE WHEN pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
+                                 + {DECONTAM13_K}
+                          OR lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
+                        THEN 1 ELSE 0 END AS is_start
+            FROM (SELECT DISTINCT doc_id, n_tokens, pos FROM hits)
+        ),
+        islands AS (
+            SELECT doc_id, n_tokens, pos,
+                   sum(is_start) OVER (
+                       PARTITION BY doc_id ORDER BY pos
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS island
+            FROM ordered
+        ),
+        merged AS (
+            SELECT doc_id, n_tokens, island,
+                   min(pos) AS s, max(pos) + {DECONTAM13_K - 1} AS e
+            FROM islands GROUP BY doc_id, n_tokens, island
+        )
+        SELECT doc_id,
+               CAST(count(*) AS BIGINT) AS n_spans,
+               CAST(sum(e - s + 1) AS BIGINT) AS covered_tokens,
+               ROUND(sum(e - s + 1) / CAST(any_value(n_tokens) AS DOUBLE), 6)
+                   AS coverage_frac
+        FROM merged GROUP BY doc_id
+    """,
+    tags=("curation", "decontamination", "span-merge", "extension"),
+)
+def q_decontam_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Merged contaminated-span coverage per doc: each 13-gram hit
+    covers tokens [pos, pos+12]; overlapping/adjacent hits merge into
+    maximal spans (classic gaps-and-islands — with fixed-length
+    intervals a new island starts exactly when pos > prev_pos + 13;
+    pos = prev_pos + 13 is the exactly-adjacent case and merges),
+    and the report is spans, covered tokens, and the covered fraction
+    — the number that decides whether to cut spans or drop the doc.
+    Window partitions are per contaminated doc (bounded by doc
+    length); only hit rows ever reach the window. A plain-Python
+    interval-merge recompute pins the island logic independently of
+    the mirrored oracle."""
+    docs = read_table(spark, sf_dir, "documents")
+    hits = contamination_hits(docs).select("doc_id", "n_tokens", "pos").distinct()
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    ordered = hits.select(
+        "doc_id",
+        "n_tokens",
+        "pos",
+        F.when(
+            F.lag("pos").over(w).isNull()
+            # > prev + K (not K−1): covers at pos = prev + K are exactly
+            # adjacent — one contiguous contaminated run — and must
+            # merge (round-9 review find, aligned with the r8 test's
+            # sort-and-sweep reference which always merged adjacency)
+            | (F.col("pos") > F.lag("pos").over(w) + DECONTAM13_K),
+            1,
+        )
+        .otherwise(0)
+        .alias("is_start"),
+    )
+    wc = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    islands = ordered.select(
+        "doc_id", "n_tokens", "pos", F.sum("is_start").over(wc).alias("island")
+    )
+    merged = islands.groupBy("doc_id", "n_tokens", "island").agg(
+        F.min("pos").alias("s"),
+        (F.max("pos") + (DECONTAM13_K - 1)).alias("e"),
+    )
+    return merged.groupBy("doc_id").agg(
+        F.count("*").cast("long").alias("n_spans"),
+        F.sum(F.col("e") - F.col("s") + 1).cast("long").alias("covered_tokens"),
+        F.round(
+            F.sum(F.col("e") - F.col("s") + 1)
+            / F.any_value("n_tokens").cast("double"),
+            6,
+        ).alias("coverage_frac"),
+    )
+
+
+@register(
+    "decontam_removal_by_source",
+    oracle=f"""
+        WITH {_duck_positioned_shingles()},
+        contaminated AS (SELECT DISTINCT doc_id FROM hits)
+        SELECT d.source,
+               count(*) AS n_docs,
+               CAST(count(c.doc_id) AS BIGINT) AS n_contaminated,
+               ROUND(count(c.doc_id) / CAST(count(*) AS DOUBLE), 6)
+                   AS contaminated_frac,
+               CAST(coalesce(sum(d.n_chars) FILTER (WHERE c.doc_id IS NOT NULL), 0)
+                    AS BIGINT) AS chars_removed
+        FROM documents d LEFT JOIN contaminated c ON d.doc_id = c.doc_id
+        WHERE d.source <> '{BENCH_SOURCE}'
+        GROUP BY d.source
+    """,
+    tags=("curation", "decontamination", "report", "extension"),
+)
+def q_decontam_removal_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source decontamination removal report: docs scanned, docs
+    carrying any benchmark 13-gram, the removal fraction, and the
+    payload chars a drop-the-doc policy would cut — the sign-off table
+    for a decontamination run. Sources with zero hits still report
+    (LEFT join from the corpus). The contaminated-id set is small by
+    construction, so Catalyst's adaptive planner broadcasts it into
+    the corpus-side join unhinted."""
+    docs = read_table(spark, sf_dir, "documents")
+    contaminated = contamination_hits(docs).select("doc_id").distinct()
+    train = docs.where(F.col("source") != BENCH_SOURCE)
+    return (
+        train.join(
+            contaminated.withColumn("__hit", F.lit(1)), "doc_id", "left"
+        )
+        .groupBy("source")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.count("__hit").cast("long").alias("n_contaminated"),
+            F.round(
+                F.count("__hit") / F.count("*").cast("double"), 6
+            ).alias("contaminated_frac"),
+            F.coalesce(
+                F.sum(F.when(F.col("__hit").isNotNull(), F.col("n_chars"))), F.lit(0)
+            )
+            .cast("long")
+            .alias("chars_removed"),
         )
     )

@@ -20,6 +20,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
+from velox_hadoop_spark.operators.dedup import (
+    _duck_cluster_cte,
+    _duck_components,
+    _duck_lsh_pairs,
+    _duck_minhash_cte,
+)
+from velox_hadoop_spark.operators.textstats import _duck_lang_sql, duck_quality_select
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -38,17 +45,9 @@ from velox_hadoop_spark.plans.registry import register
         ),
         pairs AS (
             SELECT hub AS id_a, p_partkey AS id_b FROM grp WHERE p_partkey <> hub
-        ),
-        edges AS (
-            SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b, id_a FROM pairs
-        ),
-        reach(node, lbl) AS (
-            SELECT u, u FROM edges
-            UNION
-            SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.node
-        ),
-        comp AS (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node)
+        )"""
+    + _duck_components()
+    + """
         SELECT cluster_id, count(*) AS n_nodes FROM comp GROUP BY cluster_id
     """,
     tags=("graph", "connected-components", "extension"),
@@ -82,8 +81,18 @@ def q_connected_components_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "near_dup_cluster_size_histogram",
-    oracle=None,  # registered via _cluster_hist_oracle below (built from
-    # the dedup module's shared CTE helpers at import time)
+    oracle=_duck_cluster_cte()
+    + """,
+        assigned AS (
+            SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
+            FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
+        ),
+        sizes AS (
+            SELECT cluster_id, count(*) AS sz FROM assigned GROUP BY cluster_id
+        )
+        SELECT CAST(sz AS BIGINT) AS cluster_size, count(*) AS n_clusters
+        FROM sizes GROUP BY sz
+    """,
     tags=("dedup", "clusters", "histogram", "extension"),
 )
 def q_near_dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,54 +106,6 @@ def q_near_dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataF
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("sz"))
     return sizes.groupBy(F.col("sz").alias("cluster_size")).agg(
         F.count("*").alias("n_clusters")
-    )
-
-
-def _cluster_hist_oracle() -> str:
-    from velox_hadoop_spark.operators.dedup import (
-        _BAND_KEYS,
-        MAX_KEY_DOC_FREQ,
-        _duck_minhash_cte,
-    )
-
-    return (
-        _duck_minhash_cte().replace("WITH sh AS", "WITH RECURSIVE sh AS", 1)
-        + f""",
-        bands AS ({_BAND_KEYS}),
-        cool AS (
-            SELECT band_id, band_key FROM bands
-            GROUP BY band_id, band_key
-            HAVING count(*) <= {MAX_KEY_DOC_FREQ}
-        ),
-        capped AS (
-            SELECT bands.* FROM bands JOIN cool USING (band_id, band_key)
-        ),
-        pairs AS (
-            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM capped a JOIN capped b
-              ON a.band_id = b.band_id AND a.band_key = b.band_key
-             AND a.doc_id < b.doc_id
-        ),
-        edges AS (
-            SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b, id_a FROM pairs
-        ),
-        reach(node, lbl) AS (
-            SELECT u, u FROM edges
-            UNION
-            SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.node
-        ),
-        comp AS (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node),
-        assigned AS (
-            SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
-            FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-        ),
-        sizes AS (
-            SELECT cluster_id, count(*) AS sz FROM assigned GROUP BY cluster_id
-        )
-        SELECT CAST(sz AS BIGINT) AS cluster_size, count(*) AS n_clusters
-        FROM sizes GROUP BY sz
-    """
     )
 
 
@@ -247,7 +208,7 @@ def _budget_curve_oracle() -> str:
 
 @register(
     "ann_recall_budget_curve",
-    oracle=None,  # attached below (needs similarity helpers at import)
+    oracle=_budget_curve_oracle(),
     tags=("similarity", "ann", "ivf", "tuning-curve", "extension"),
 )
 def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,11 +344,6 @@ _BAND_CONFIGS = ((8, 1), (4, 2), (2, 4))
 
 
 def _band_tuning_oracle() -> str:
-    from velox_hadoop_spark.operators.dedup import (
-        MAX_KEY_DOC_FREQ,
-        _duck_minhash_cte,
-    )
-
     blocks, rows = [], []
     for b, r in _BAND_CONFIGS:
         keys = " UNION ALL ".join(
@@ -397,39 +353,19 @@ def _band_tuning_oracle() -> str:
             )
             for band in range(b)
         )
-        blocks.append(
-            f"""
-        bands_{b}x{r} AS ({keys}),
-        cool_{b}x{r} AS (
-            SELECT band_id, band_key FROM bands_{b}x{r}
-            GROUP BY band_id, band_key
-            HAVING count(*) <= {MAX_KEY_DOC_FREQ}
-        ),
-        pairs_{b}x{r} AS (
-            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM (SELECT t.* FROM bands_{b}x{r} t JOIN cool_{b}x{r} USING (band_id, band_key)) a
-            JOIN (SELECT t.* FROM bands_{b}x{r} t JOIN cool_{b}x{r} USING (band_id, band_key)) b
-              ON a.band_id = b.band_id AND a.band_key = b.band_key
-             AND a.doc_id < b.doc_id
-        )"""
-        )
+        blocks.append(_duck_lsh_pairs(f"pairs_{b}x{r}", keys=keys, sfx=f"_{b}x{r}"))
         rows.append(
             f"""
         SELECT '{b}x{r}' AS config, CAST({b} AS BIGINT) AS bands,
                CAST({r} AS BIGINT) AS rows_per_band,
                CAST((SELECT count(*) FROM pairs_{b}x{r}) AS BIGINT) AS n_candidate_pairs"""
         )
-    return (
-        _duck_minhash_cte()
-        + ","
-        + ",".join(blocks)
-        + " UNION ALL ".join(rows)
-    )
+    return _duck_minhash_cte() + "".join(blocks) + " UNION ALL ".join(rows)
 
 
 @register(
     "minhash_band_tuning_report",
-    oracle=None,  # attached below (needs dedup helpers at import)
+    oracle=_band_tuning_oracle(),
     tags=("dedup", "lsh", "tuning-curve", "extension"),
 )
 def q_minhash_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,7 +515,17 @@ def q_dedup_keep_policy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_quality_deciles",
-    oracle=None,  # attached below (reuses textstats.duck_quality_select)
+    oracle=f"""
+        WITH q AS ({duck_quality_select()}),
+        tiled AS (
+            SELECT quality,
+                   CAST(ntile(10) OVER (ORDER BY quality, doc_id) AS BIGINT) AS decile
+            FROM q
+        )
+        SELECT decile, count(*) AS n_docs,
+               min(quality) AS min_q, max(quality) AS max_q
+        FROM tiled GROUP BY decile
+    """,
     tags=("quality", "deciles", "extension"),
 )
 def q_doc_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -618,7 +564,12 @@ def q_doc_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lang_id_confusion_matrix",
-    oracle=None,  # attached below (reuses textstats._duck_lang_sql)
+    oracle=f"""
+        SELECT d.lang AS actual_lang, p.pred_lang, count(*) AS n
+        FROM ({_duck_lang_sql()}) p
+        JOIN documents d ON p.doc_id = d.doc_id
+        GROUP BY d.lang, p.pred_lang
+    """,
     tags=("textstats", "langid", "confusion-matrix", "extension"),
 )
 def q_lang_id_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,7 +589,45 @@ def q_lang_id_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "auc_quality_en_classifier",
-    oracle=None,  # attached below (reuses textstats.duck_quality_select)
+    oracle=f"""
+        WITH q AS ({duck_quality_select()}),
+        scored AS (
+            SELECT q.quality, (d.lang = 'en') AS is_pos
+            FROM q JOIN documents d ON q.doc_id = d.doc_id
+        ),
+        grid AS (
+            SELECT quality,
+                   count(*) AS n_s,
+                   count(*) FILTER (WHERE is_pos) AS n_pos_s
+            FROM scored GROUP BY quality
+        ),
+        ranked AS (
+            SELECT n_s, n_pos_s,
+                   CAST(coalesce(sum(n_s) OVER (
+                       ORDER BY quality
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                   ), 0) AS BIGINT) AS cum_before
+            FROM grid
+        ),
+        agg AS (
+            -- HUGEINT rank sum: the per-score product and the total
+            -- 2*R_pos reach ~P*(P+N), past int64 at multi-billion-doc
+            -- corpora (round-9 review find, the Kendall overflow class)
+            SELECT CAST(sum(CAST(n_pos_s AS HUGEINT)
+                            * (2 * cum_before + n_s + 1)) AS HUGEINT)
+                       AS two_rank_sum,
+                   CAST(sum(n_pos_s) AS BIGINT) AS n_pos,
+                   CAST(sum(n_s - n_pos_s) AS BIGINT) AS n_neg
+            FROM ranked
+        )
+        SELECT n_pos, n_neg,
+               CASE WHEN n_pos > 0 AND n_neg > 0 THEN
+                   round((CAST(two_rank_sum AS DOUBLE) / 2.0
+                          - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1.0) / 2.0)
+                         / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)), 6)
+               END AS auc
+        FROM agg
+    """,
     tags=("stats", "auc", "classifier", "extension"),
 )
 def q_auc_quality_en_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -948,8 +937,7 @@ def _split_leakage_oracle() -> str:
 
 @register(
     "split_leakage_audit",
-    oracle=None,  # attached below (needs the sampling module's
-    # cross-engine bucket hash, shared with assign_split)
+    oracle=_split_leakage_oracle(),
     tags=("sampling", "leakage", "audit", "extension"),
 )
 def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1155,88 +1143,3 @@ def q_ks_statistic_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ks_stat"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Late-bound oracles (need sibling-module SQL helpers that exist only
-# after those modules import; attach by rebuilding the QuerySpec)
-# ---------------------------------------------------------------------------
-
-
-def _attach_oracles() -> None:
-    from velox_hadoop_spark.operators.textstats import (
-        _duck_lang_sql,
-        duck_quality_select,
-    )
-    from velox_hadoop_spark.plans.registry import attach_oracle
-
-    confusion = f"""
-        SELECT d.lang AS actual_lang, p.pred_lang, count(*) AS n
-        FROM ({_duck_lang_sql()}) p
-        JOIN documents d ON p.doc_id = d.doc_id
-        GROUP BY d.lang, p.pred_lang
-    """
-    deciles = f"""
-        WITH q AS ({duck_quality_select()}),
-        tiled AS (
-            SELECT quality,
-                   CAST(ntile(10) OVER (ORDER BY quality, doc_id) AS BIGINT) AS decile
-            FROM q
-        )
-        SELECT decile, count(*) AS n_docs,
-               min(quality) AS min_q, max(quality) AS max_q
-        FROM tiled GROUP BY decile
-    """
-    auc = f"""
-        WITH q AS ({duck_quality_select()}),
-        scored AS (
-            SELECT q.quality, (d.lang = 'en') AS is_pos
-            FROM q JOIN documents d ON q.doc_id = d.doc_id
-        ),
-        grid AS (
-            SELECT quality,
-                   count(*) AS n_s,
-                   count(*) FILTER (WHERE is_pos) AS n_pos_s
-            FROM scored GROUP BY quality
-        ),
-        ranked AS (
-            SELECT n_s, n_pos_s,
-                   CAST(coalesce(sum(n_s) OVER (
-                       ORDER BY quality
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS BIGINT) AS cum_before
-            FROM grid
-        ),
-        agg AS (
-            -- HUGEINT rank sum: the per-score product and the total
-            -- 2*R_pos reach ~P*(P+N), past int64 at multi-billion-doc
-            -- corpora (round-9 review find, the Kendall overflow class)
-            SELECT CAST(sum(CAST(n_pos_s AS HUGEINT)
-                            * (2 * cum_before + n_s + 1)) AS HUGEINT)
-                       AS two_rank_sum,
-                   CAST(sum(n_pos_s) AS BIGINT) AS n_pos,
-                   CAST(sum(n_s - n_pos_s) AS BIGINT) AS n_neg
-            FROM ranked
-        )
-        SELECT n_pos, n_neg,
-               CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-                   round((CAST(two_rank_sum AS DOUBLE) / 2.0
-                          - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1.0) / 2.0)
-                         / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)), 6)
-               END AS auc
-        FROM agg
-    """
-    late = {
-        "near_dup_cluster_size_histogram": _cluster_hist_oracle(),
-        "ann_recall_budget_curve": _budget_curve_oracle(),
-        "minhash_band_tuning_report": _band_tuning_oracle(),
-        "lang_id_confusion_matrix": confusion,
-        "doc_quality_deciles": deciles,
-        "auc_quality_en_classifier": auc,
-        "split_leakage_audit": _split_leakage_oracle(),
-    }
-    for name, sql in late.items():
-        attach_oracle(name, sql)  # same lint gate as register()
-
-
-_attach_oracles()

@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.contamination import PACK_BUDGET
 from velox_hadoop_spark.operators.llmops2 import _DUCK_FIX4, _fix4
-from velox_hadoop_spark.plans.registry import attach_oracle, register
+from velox_hadoop_spark.operators.textstats import BPE_ISH, duck_quality_select
+from velox_hadoop_spark.plans.registry import register
 
 MIN_CHARS = 200  # quality gate, same constant as pipeline.py
 
@@ -39,7 +40,36 @@ CTX_BUCKETS = (16, 32, 64, 128, 256)
 
 @register(
     "decile_lift_table",
-    oracle=None,  # attached below (reuses textstats.duck_quality_select)
+    oracle=f"""
+        WITH q AS ({duck_quality_select()}),
+        tiled AS (
+            SELECT CAST(ntile(10) OVER (ORDER BY q.quality, q.doc_id) AS BIGINT) AS decile,
+                   (d.lang = 'en') AS is_pos
+            FROM q JOIN documents d ON q.doc_id = d.doc_id
+        ),
+        per AS (
+            SELECT decile, count(*) AS n_docs,
+                   count(*) FILTER (WHERE is_pos) AS n_pos
+            FROM tiled GROUP BY decile
+        ),
+        tot AS (
+            SELECT CAST(sum(n_docs) AS BIGINT) AS tot,
+                   CAST(sum(n_pos) AS BIGINT) AS tot_pos
+            FROM per
+        )
+        SELECT decile, n_docs, CAST(n_pos AS BIGINT) AS n_pos,
+               round(n_pos / CAST(n_docs AS DOUBLE), 6) AS pos_rate,
+               CASE WHEN t.tot_pos > 0 THEN
+                   round(CAST(n_pos AS DOUBLE) * t.tot / (n_docs * t.tot_pos), 6)
+               END AS lift,
+               CASE WHEN t.tot_pos > 0 THEN
+                   round(sum(n_pos) OVER (
+                             ORDER BY decile DESC
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                         ) / CAST(t.tot_pos AS DOUBLE), 6)
+               END AS cum_gain_from_top
+        FROM per CROSS JOIN tot t
+    """,
     tags=("stats", "lift", "classifier", "extension"),
 )
 def q_decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,7 +140,22 @@ def q_decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_fertility_by_lang",
-    oracle=None,  # attached below (shares textstats.BPE_ISH)
+    oracle=f"""
+        WITH per AS (
+            SELECT lang,
+                   CAST(len(regexp_extract_all(text, '{BPE_ISH}')) AS BIGINT) AS n_bpe,
+                   CAST(len(list_filter(string_split_regex(text, '\\s+'),
+                                        t -> t <> '')) AS BIGINT) AS n_ws
+            FROM documents
+        )
+        SELECT lang, count(*) AS n_docs,
+               CAST(sum(n_bpe) AS BIGINT) AS total_bpe,
+               CAST(sum(n_ws) AS BIGINT) AS total_ws,
+               CASE WHEN sum(n_ws) > 0 THEN
+                   round(sum(n_bpe) / CAST(sum(n_ws) AS DOUBLE), 6)
+               END AS fertility
+        FROM per GROUP BY lang
+    """,
     tags=("textstats", "tokenizer", "fertility", "extension"),
 )
 def q_token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,8 +167,6 @@ def q_token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division is deterministic at any parallelism. Per-row token
     counting stays inside whole-stage codegen (regexp_extract_all +
     filter/split — same expressions as textstats.token_stats)."""
-    from velox_hadoop_spark.operators.textstats import BPE_ISH
-
     docs = read_table(spark, sf_dir, "documents")
     words = F.expr("filter(split(text, '\\\\s+'), t -> t <> '')")
     per = docs.select(
@@ -144,9 +187,39 @@ def q_token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ctx_budget_oracle() -> str:
+    bucket_case = "CASE " + " ".join(
+        f"WHEN n_tok <= {b} THEN {i + 1}" for i, b in enumerate(CTX_BUCKETS)
+    ) + f" ELSE {len(CTX_BUCKETS) + 1} END"
+    label_case = "CASE " + " ".join(
+        f"WHEN n_tok <= {b} THEN '<={b}'" for b in CTX_BUCKETS
+    ) + f" ELSE '>{CTX_BUCKETS[-1]}' END"
+    return f"""
+        WITH toks AS (
+            SELECT CAST(len(list_filter(string_split_regex(text, '\\s+'),
+                                        t -> t <> '')) AS BIGINT) AS n_tok
+            FROM documents
+        ),
+        per AS (
+            SELECT CAST({bucket_case} AS BIGINT) AS bucket_ord,
+                   {label_case} AS bucket,
+                   count(*) AS n_docs,
+                   CAST(sum(n_tok) AS BIGINT) AS total_tokens
+            FROM toks GROUP BY 1, 2
+        ),
+        tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS tot_docs FROM per)
+        SELECT bucket_ord, bucket, n_docs, total_tokens,
+               round(sum(n_docs) OVER (
+                         ORDER BY bucket_ord
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                     ) / CAST(t.tot_docs AS DOUBLE), 6) AS cum_doc_share
+        FROM per CROSS JOIN tot t
+    """
+
+
 @register(
     "context_window_budget",
-    oracle=None,  # attached below
+    oracle=_ctx_budget_oracle(),
     tags=("curation", "context-window", "token-budget", "extension"),
 )
 def q_context_window_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,7 +263,46 @@ def q_context_window_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "curation_pack_report",
-    oracle=None,  # attached below (chains pipeline + pack oracles)
+    oracle=f"""
+        WITH quality AS (
+            SELECT * FROM documents WHERE n_chars >= {MIN_CHARS}
+        ),
+        keepers AS (
+            SELECT min(doc_id) AS doc_id FROM quality GROUP BY md5(text)
+        ),
+        kept AS (
+            SELECT q.* FROM quality q JOIN keepers k ON q.doc_id = k.doc_id
+        ),
+        toks AS (
+            SELECT source, doc_id,
+                   CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS n_tok
+            FROM kept
+        ),
+        laid AS (
+            SELECT source, doc_id, n_tok,
+                   sum(n_tok) OVER (
+                       PARTITION BY source ORDER BY doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS cum
+            FROM toks
+        ),
+        seqs AS (
+            SELECT source,
+                   CAST(floor((cum - n_tok) / {PACK_BUDGET}) AS BIGINT) AS seq_id,
+                   count(*) AS n_docs,
+                   CAST(sum(n_tok) AS BIGINT) AS seq_tokens
+            FROM laid
+            GROUP BY source, CAST(floor((cum - n_tok) / {PACK_BUDGET}) AS BIGINT)
+        )
+        SELECT source,
+               CAST(sum(n_docs) AS BIGINT) AS n_docs_kept,
+               count(*) AS n_seqs,
+               CAST(count(*) FILTER (WHERE seq_tokens > {PACK_BUDGET}) AS BIGINT)
+                   AS n_overflow,
+               {_DUCK_FIX4.format(f"CAST(sum(seq_tokens) AS DOUBLE) / (count(*) * {PACK_BUDGET})")}
+                   AS utilization
+        FROM seqs GROUP BY source
+    """,
     tags=("curation", "packing", "dedup", "llm-pipeline", "extension"),
 )
 def q_curation_pack_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,140 +460,3 @@ def q_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "new_tokens",
         F.sum("new_tokens").over(w).cast("long").alias("cum_vocab"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Late-bound oracles (shared CTE fragments from textstats / pipeline)
-# ---------------------------------------------------------------------------
-
-
-def _attach_oracles() -> None:
-    from velox_hadoop_spark.operators.textstats import BPE_ISH, duck_quality_select
-
-    lift = f"""
-        WITH q AS ({duck_quality_select()}),
-        tiled AS (
-            SELECT CAST(ntile(10) OVER (ORDER BY q.quality, q.doc_id) AS BIGINT) AS decile,
-                   (d.lang = 'en') AS is_pos
-            FROM q JOIN documents d ON q.doc_id = d.doc_id
-        ),
-        per AS (
-            SELECT decile, count(*) AS n_docs,
-                   count(*) FILTER (WHERE is_pos) AS n_pos
-            FROM tiled GROUP BY decile
-        ),
-        tot AS (
-            SELECT CAST(sum(n_docs) AS BIGINT) AS tot,
-                   CAST(sum(n_pos) AS BIGINT) AS tot_pos
-            FROM per
-        )
-        SELECT decile, n_docs, CAST(n_pos AS BIGINT) AS n_pos,
-               round(n_pos / CAST(n_docs AS DOUBLE), 6) AS pos_rate,
-               CASE WHEN t.tot_pos > 0 THEN
-                   round(CAST(n_pos AS DOUBLE) * t.tot / (n_docs * t.tot_pos), 6)
-               END AS lift,
-               CASE WHEN t.tot_pos > 0 THEN
-                   round(sum(n_pos) OVER (
-                             ORDER BY decile DESC
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                         ) / CAST(t.tot_pos AS DOUBLE), 6)
-               END AS cum_gain_from_top
-        FROM per CROSS JOIN tot t
-    """
-
-    fertility = f"""
-        WITH per AS (
-            SELECT lang,
-                   CAST(len(regexp_extract_all(text, '{BPE_ISH}')) AS BIGINT) AS n_bpe,
-                   CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                        t -> t <> '')) AS BIGINT) AS n_ws
-            FROM documents
-        )
-        SELECT lang, count(*) AS n_docs,
-               CAST(sum(n_bpe) AS BIGINT) AS total_bpe,
-               CAST(sum(n_ws) AS BIGINT) AS total_ws,
-               CASE WHEN sum(n_ws) > 0 THEN
-                   round(sum(n_bpe) / CAST(sum(n_ws) AS DOUBLE), 6)
-               END AS fertility
-        FROM per GROUP BY lang
-    """
-
-    bucket_case = "CASE " + " ".join(
-        f"WHEN n_tok <= {b} THEN {i + 1}" for i, b in enumerate(CTX_BUCKETS)
-    ) + f" ELSE {len(CTX_BUCKETS) + 1} END"
-    label_case = "CASE " + " ".join(
-        f"WHEN n_tok <= {b} THEN '<={b}'" for b in CTX_BUCKETS
-    ) + f" ELSE '>{CTX_BUCKETS[-1]}' END"
-    ctx = f"""
-        WITH toks AS (
-            SELECT CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                        t -> t <> '')) AS BIGINT) AS n_tok
-            FROM documents
-        ),
-        per AS (
-            SELECT CAST({bucket_case} AS BIGINT) AS bucket_ord,
-                   {label_case} AS bucket,
-                   count(*) AS n_docs,
-                   CAST(sum(n_tok) AS BIGINT) AS total_tokens
-            FROM toks GROUP BY 1, 2
-        ),
-        tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS tot_docs FROM per)
-        SELECT bucket_ord, bucket, n_docs, total_tokens,
-               round(sum(n_docs) OVER (
-                         ORDER BY bucket_ord
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) / CAST(t.tot_docs AS DOUBLE), 6) AS cum_doc_share
-        FROM per CROSS JOIN tot t
-    """
-
-    pack = f"""
-        WITH quality AS (
-            SELECT * FROM documents WHERE n_chars >= {MIN_CHARS}
-        ),
-        keepers AS (
-            SELECT min(doc_id) AS doc_id FROM quality GROUP BY md5(text)
-        ),
-        kept AS (
-            SELECT q.* FROM quality q JOIN keepers k ON q.doc_id = k.doc_id
-        ),
-        toks AS (
-            SELECT source, doc_id,
-                   CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS n_tok
-            FROM kept
-        ),
-        laid AS (
-            SELECT source, doc_id, n_tok,
-                   sum(n_tok) OVER (
-                       PARTITION BY source ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS cum
-            FROM toks
-        ),
-        seqs AS (
-            SELECT source,
-                   CAST(floor((cum - n_tok) / {PACK_BUDGET}) AS BIGINT) AS seq_id,
-                   count(*) AS n_docs,
-                   CAST(sum(n_tok) AS BIGINT) AS seq_tokens
-            FROM laid
-            GROUP BY source, CAST(floor((cum - n_tok) / {PACK_BUDGET}) AS BIGINT)
-        )
-        SELECT source,
-               CAST(sum(n_docs) AS BIGINT) AS n_docs_kept,
-               count(*) AS n_seqs,
-               CAST(count(*) FILTER (WHERE seq_tokens > {PACK_BUDGET}) AS BIGINT)
-                   AS n_overflow,
-               {_DUCK_FIX4.format(f"CAST(sum(seq_tokens) AS DOUBLE) / (count(*) * {PACK_BUDGET})")}
-                   AS utilization
-        FROM seqs GROUP BY source
-    """
-
-    for name, sql in {
-        "decile_lift_table": lift,
-        "token_fertility_by_lang": fertility,
-        "context_window_budget": ctx,
-        "curation_pack_report": pack,
-    }.items():
-        attach_oracle(name, sql)  # same lint gate as register()
-
-
-_attach_oracles()

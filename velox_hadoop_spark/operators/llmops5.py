@@ -335,7 +335,7 @@ def q_embedding_doclen_correlation(spark: SparkSession, sf_dir: str) -> DataFram
     (the Brown-smoother rounding-flip class), while integer moments
     in decimal(38)/HUGEINT are exact at any corpus size — the final
     correlation is a fixed expression tree over identical integers.
-    Zero-variance groups emit nothing (stats2.safe_corr convention)."""
+    Zero-variance groups emit nothing (stats.safe_corr convention)."""
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     emb = read_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"),

@@ -15,7 +15,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
-from velox_hadoop_spark.operators.contamination2 import positioned_shingles
+from velox_hadoop_spark.operators.contamination import positioned_shingles
+from velox_hadoop_spark.operators.dedup import (
+    _DUCK_MH_ESTIMATE,
+    _duck_cand_overlap,
+    _duck_lsh_pairs,
+    _duck_minhash_cte,
+)
 from velox_hadoop_spark.operators.spanremoval import SPANREM_K
 from velox_hadoop_spark.plans.registry import register
 
@@ -112,7 +118,7 @@ def q_repeated_span_savings_curve(spark: SparkSession, sf_dir: str) -> DataFrame
             F.when(
                 F.lag("pos").over(w).isNull()
                 # adjacency merges (> prev + k, not k−1) — the uniform
-                # island rule across spanremoval/contamination2/here
+                # island rule across spanremoval/contamination/here
                 | (F.col("pos") > F.lag("pos").over(w) + SPANREM_K),
                 1,
             )
@@ -245,46 +251,13 @@ def q_bigram_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _duck_estimate_error_sql() -> str:
-    from velox_hadoop_spark.plans.registry import specs
-
-    est_oracle = specs()["minhash_jaccard_estimate"].oracle
-    # exact jaccard for the SAME candidates: reuse the verified-pairs
-    # oracle minus its >= tau filter by restating the shared chain
-    from velox_hadoop_spark.operators.dedup import (
-        MAX_KEY_DOC_FREQ,
-        _BAND_KEYS,
-        _duck_minhash_cte,
-    )
-
+    # exact jaccard for the SAME candidates: the verified-pairs chain
+    # minus its >= tau filter
     exact = (
         _duck_minhash_cte()
-        + f""",
-        bands AS ({_BAND_KEYS}),
-        cool AS (
-            SELECT band_id, band_key FROM bands
-            GROUP BY band_id, band_key
-            HAVING count(*) <= {MAX_KEY_DOC_FREQ}
-        ),
-        capped AS (SELECT bands.* FROM bands JOIN cool USING (band_id, band_key)),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM capped a JOIN capped b
-              ON a.band_id = b.band_id AND a.band_key = b.band_key
-             AND a.doc_id < b.doc_id
-        ),
-        cool_sh AS (
-            SELECT shingle FROM sh GROUP BY shingle
-            HAVING count(*) <= {MAX_KEY_DOC_FREQ}
-        ),
-        shc AS (SELECT sh.* FROM sh JOIN cool_sh USING (shingle)),
-        sizes AS (SELECT doc_id, count(*) AS n FROM shc GROUP BY doc_id),
-        inter AS (
-            SELECT c.id_a, c.id_b, count(*) AS n_shared
-            FROM cand c
-            JOIN shc a ON a.doc_id = c.id_a
-            JOIN shc b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-            GROUP BY c.id_a, c.id_b
-        )
+        + _duck_lsh_pairs()
+        + _duck_cand_overlap()
+        + """
         SELECT c.id_a, c.id_b,
                CASE WHEN sa.n IS NULL OR sb.n IS NULL THEN 0.0
                     ELSE ROUND(coalesce(i.n_shared, 0)
@@ -297,7 +270,7 @@ def _duck_estimate_error_sql() -> str:
     """
     )
     return f"""
-        WITH est AS ({est_oracle}),
+        WITH est AS ({_DUCK_MH_ESTIMATE}),
         exact AS ({exact}),
         err AS (
             SELECT CAST(round(abs(e.jaccard_est - x.jaccard) * 1000000)
@@ -318,7 +291,7 @@ def _duck_estimate_error_sql() -> str:
 
 @register(
     "minhash_estimate_error_audit",
-    oracle=None,  # attached below (assembled from the registered oracles)
+    oracle=_duck_estimate_error_sql(),
     tags=("dedup", "minhash", "calibration", "extension"),
 )
 def q_minhash_estimate_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -359,10 +332,12 @@ def q_minhash_estimate_error_audit(spark: SparkSession, sf_dir: str) -> DataFram
         StorageLevel.MEMORY_AND_DISK
     )
     # persist: the candidate frame feeds the estimator join, the exact
-    # verification, and the zero-overlap restoration below
-    cand = lsh_candidate_pairs(lsh_bands(sig, "doc_id"), "doc_id").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # verification, and the zero-overlap restoration below (the bands
+    # derive from the persisted sig, so the hot-key guard skips its own
+    # input cache)
+    cand = lsh_candidate_pairs(
+        lsh_bands(sig, "doc_id"), "doc_id", persist_guard_input=False
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     est = minhash_estimate(cand, sig).select("id_a", "id_b", "jaccard_est")
     sh = shingle_set(docs, "doc_id", "text")
     exact = verify_candidate_jaccard(cand, sh, "doc_id")
@@ -391,8 +366,3 @@ def q_minhash_estimate_error_audit(spark: SparkSession, sf_dir: str) -> DataFram
         F.round(F.col("mx") / 1000000.0, 6).alias("max_abs_err"),
         "n_within_01",
     )
-
-
-from velox_hadoop_spark.plans.registry import attach_oracle  # noqa: E402
-
-attach_oracle("minhash_estimate_error_audit", _duck_estimate_error_sql())

@@ -29,9 +29,7 @@ from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.hashing import duck_bucket, spark_bucket
 from velox_hadoop_spark.operators.dedup import (
     _docs_par,
-    _duck_minhash_cte,
-    _BAND_KEYS,
-    MAX_KEY_DOC_FREQ,
+    _duck_cluster_cte,
     connected_components,
     lsh_bands,
     lsh_candidate_pairs,
@@ -51,33 +49,8 @@ COV_QSCALE = 1_000_000    # micro-unit quantization of embedding values
 # ---------------------------------------------------------------------------
 
 _DUCK_CLUSTERS = (
-    _duck_minhash_cte().replace("WITH sh AS", "WITH RECURSIVE sh AS", 1)
-    + f""",
-        bands AS ({_BAND_KEYS}),
-        cool AS (
-            SELECT band_id, band_key FROM bands
-            GROUP BY band_id, band_key
-            HAVING count(*) <= {MAX_KEY_DOC_FREQ}
-        ),
-        capped AS (
-            SELECT bands.* FROM bands JOIN cool USING (band_id, band_key)
-        ),
-        pairs AS (
-            SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM capped a JOIN capped b
-              ON a.band_id = b.band_id AND a.band_key = b.band_key
-             AND a.doc_id < b.doc_id
-        ),
-        edges AS (
-            SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b, id_a FROM pairs
-        ),
-        reach(node, lbl) AS (
-            SELECT u, u FROM edges
-            UNION
-            SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.node
-        ),
-        comp AS (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node),
+    _duck_cluster_cte()
+    + """,
         assigned AS (
             SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
             FROM documents d LEFT JOIN comp c ON d.doc_id = c.node

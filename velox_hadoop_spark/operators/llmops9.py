@@ -13,7 +13,7 @@ per-token surprisal on a 1e-6 grid, per-term mixture products on a
 1e-9/1e-12 grid, AP@k terms as exact integers on the lcm(1..10)=2520
 grid, per-member silhouette terms on a 1e-6 grid — so no threshold,
 ranking, or weight ever rides a free-order double sum; exp() outputs
-are pinned with the funcs2 _fix6 convention before reuse.
+are pinned with the sqlbreadth._fix6 convention before reuse.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from velox_hadoop_spark.operators.layout import (
     COMPACT_TARGET_ROWS,
     compaction_plan,
 )
-from velox_hadoop_spark.operators.retrieval2 import NDCG_QUERIES
+from velox_hadoop_spark.operators.retrieval import NDCG_QUERIES
 from velox_hadoop_spark.operators.similarity import _DUCK_COS, cosine_pairs
 from velox_hadoop_spark.functions.vectors import to_double
 from velox_hadoop_spark.plans.registry import register
@@ -46,7 +46,7 @@ DOREMI_MAX_EXCESS = 10.0
 MAP_K = 10
 _AP_LCM = 2520       # lcm(1..10): precision@i terms become exact integers
 
-from velox_hadoop_spark.operators.funcs2 import _fix6  # noqa: E402  (the ONE home of the transcendental pin)
+from velox_hadoop_spark.operators.sqlbreadth import _fix6  # noqa: E402  (the ONE home of the transcendental pin)
 
 
 # ---------------------------------------------------------------------------
@@ -154,7 +154,7 @@ def q_doremi_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     depends on step 1's mixture). Deterministic end to end: surprisal
     is summed as exact 1e-6-grid BIGINTs, mixture-average terms as
     1e-9-grid BIGINTs, update masses as 1e-12-grid BIGINTs, and exp()
-    is pinned to the 1e-6 grid (funcs2 convention) — so the clipped
+    is pinned to the 1e-6 grid (sqlbreadth._fix6 convention) — so the clipped
     threshold and both normalizations never ride a free-order double.
 
     Scale shape: one token explode feeding a token-frequency join
@@ -1011,7 +1011,7 @@ def q_doremi_mixture_shift_report(spark: SparkSession, sf_dir: str) -> DataFrame
     Numeric discipline: weights arrive on the exact 1e-9 grid from the
     shared ``doremi_weight_frames`` pipeline (cached base histogram —
     this report costs |sources|-row arithmetic on a warm session);
-    ln() is pinned to the 1e-6 grid (the funcs2 _fix6 convention,
+    ln() is pinned to the 1e-6 grid (the sqlbreadth._fix6 convention,
     applied to log), every cross-source term is a BIGINT on the 1e-9
     grid, and the only doubles displayed are final ROUND-6 ratios
     (+0.0 pins the −0.0 class on the negated entropy sums). KL terms

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.pairs import id_pairs
+from velox_hadoop_spark.operators.timeseries import _duck_trunc_ema, trunc_ema_ordered
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -201,51 +202,7 @@ _EWMA_DECAY = 0.8  # weight multiplier per day of age
 _EWMA_WINDOW = 28  # truncation horizon: 0.8^28 ≈ 2e-3 residual weight
 
 
-@register(
-    "ewma_daily_revenue",
-    oracle=None,  # attached below — built from the shared ordered-fold
-    # EMA fragment (timeseries4), avoiding a circular import at module top
-    tags=("mining", "timeseries", "ewma", "extension"),
-)
-def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially-weighted moving average of daily order revenue,
-    truncated to a 28-day horizon (residual tail weight ≈ 0.2%%, which
-    also keeps the smoothing expressible as a bounded window — the
-    exact recursive form is not a relational expression).
-
-    The fact table collapses to the daily grain FIRST, so the window
-    runs on a calendar-bounded spine (≈ 2.4k rows for the full TPC-H
-    date range regardless of fact volume).
-
-    Parity hardening (round 8): the weighted ratio runs through the
-    shared ORDERED-FOLD kernel (timeseries4.trunc_ema_ordered) — the
-    previous free-order SUM over the 28-term dot product left the
-    engines one ulp apart on ~1e6-scale values, where the 4dp floor
-    grid makes a boundary flip a live per-sweep hazard (measured on
-    the Brown smoother, the identical shape); the fold makes both
-    engines execute the same float-op sequence, so the rounding is
-    display-only. Daily revenue itself is summed as integer cents, so
-    `rev` is the same double in both engines at any SF."""
-    from velox_hadoop_spark.operators.timeseries4 import trunc_ema_ordered
-
-    orders = read_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        (F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0).alias("rev")
-    )
-    ema = trunc_ema_ordered(
-        daily, "rev", alpha=1.0 - _EWMA_DECAY, out="ema",
-        horizon=_EWMA_WINDOW, decay=_EWMA_DECAY,
-    )
-    return daily.join(ema, "d").select(
-        "d",
-        "rev",
-        (F.floor(F.col("ema") * 10000 + F.lit(0.5)) / 10000).alias("ewma"),
-    )
-
-
 def _ewma_oracle() -> str:
-    from velox_hadoop_spark.operators.timeseries4 import _duck_trunc_ema
-
     return f"""
         WITH daily AS (
             SELECT CAST(o_orderdate AS DATE) AS d,
@@ -261,9 +218,43 @@ def _ewma_oracle() -> str:
     """
 
 
-from velox_hadoop_spark.plans.registry import attach_oracle as _attach  # noqa: E402
+@register(
+    "ewma_daily_revenue",
+    oracle=_ewma_oracle(),
+    tags=("mining", "timeseries", "ewma", "extension"),
+)
+def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exponentially-weighted moving average of daily order revenue,
+    truncated to a 28-day horizon (residual tail weight ≈ 0.2%%, which
+    also keeps the smoothing expressible as a bounded window — the
+    exact recursive form is not a relational expression).
 
-_attach("ewma_daily_revenue", _ewma_oracle())
+    The fact table collapses to the daily grain FIRST, so the window
+    runs on a calendar-bounded spine (≈ 2.4k rows for the full TPC-H
+    date range regardless of fact volume).
+
+    Parity hardening (round 8): the weighted ratio runs through the
+    shared ORDERED-FOLD kernel (timeseries.trunc_ema_ordered) — the
+    previous free-order SUM over the 28-term dot product left the
+    engines one ulp apart on ~1e6-scale values, where the 4dp floor
+    grid makes a boundary flip a live per-sweep hazard (measured on
+    the Brown smoother, the identical shape); the fold makes both
+    engines execute the same float-op sequence, so the rounding is
+    display-only. Daily revenue itself is summed as integer cents, so
+    `rev` is the same double in both engines at any SF."""
+    orders = read_table(spark, sf_dir, "orders")
+    daily = orders.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
+        (F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0).alias("rev")
+    )
+    ema = trunc_ema_ordered(
+        daily, "rev", alpha=1.0 - _EWMA_DECAY, out="ema",
+        horizon=_EWMA_WINDOW, decay=_EWMA_DECAY,
+    )
+    return daily.join(ema, "d").select(
+        "d",
+        "rev",
+        (F.floor(F.col("ema") * 10000 + F.lit(0.5)) / 10000).alias("ewma"),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -33,7 +33,7 @@ from velox_hadoop_spark.operators.graph import (
     TRIANGLE_PART_CAP,
     co_supply_capped_edges,
 )
-from velox_hadoop_spark.operators.graph2 import _EDGE_CTES
+from velox_hadoop_spark.operators.graph import _EDGE_CTES
 from velox_hadoop_spark.operators.similarity import ivf_assign
 from velox_hadoop_spark.plans.registry import register
 
@@ -44,7 +44,7 @@ _NORM_GRID_MAX = 9e12
 
 # The assignment CTE chain shared with ann_ivf_recall / ann_hard_
 # negatives (restated so this module's oracles stay independently
-# auditable, same convention as graph2._EDGE_CTES).
+# auditable, same convention as graph._EDGE_CTES).
 _IVF_ASSIGN_CTES = """
         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
               WHERE embedding IS NOT NULL
@@ -347,7 +347,7 @@ def q_co_supply_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = read_table(spark, sf_dir, "lineitem")
     # persisted: both unionAll branches read the full edge build (the
-    # r8 re-execution anti-pattern check — graph2's deg computation
+    # r8 re-execution anti-pattern check — degree_assortativity's deg computation
     # persists the identical two-consumer shape)
     e = co_supply_capped_edges(
         li.select(F.col("l_partkey").alias("part"), F.col("l_suppkey").alias("s"))

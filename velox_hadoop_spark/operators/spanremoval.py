@@ -15,7 +15,7 @@ Semantics (deterministic, engine-portable):
   * every occurrence of a repeated k-gram covers tokens
     [pos, pos + k − 1]; overlapping/adjacent covers merge into maximal
     spans (gaps-and-islands, same island rule as
-    ``contamination2.q_decontam_span_coverage``: a new island starts
+    ``contamination.q_decontam_span_coverage``: a new island starts
     exactly when pos > prev_pos + k — at pos = prev_pos + k the two
     covers are exactly adjacent, one contiguous removed run);
   * the document keeps the tokens outside every merged span, in
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
-from velox_hadoop_spark.operators.contamination2 import positioned_shingles
+from velox_hadoop_spark.operators.contamination import positioned_shingles
 from velox_hadoop_spark.plans.registry import register
 
 SPANREM_K = 13  # repeated-run n-gram length (tokens)

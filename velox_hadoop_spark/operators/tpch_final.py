@@ -1,7 +1,7 @@
 """Final TPC-H-analog block: the correlated-subquery shapes. [extension]
 
 Completes the 22-query TPC-H analog suite (with Q2's min-per-group in
-``join2.py`` and Q8 as the raw-SQL surface in ``tpch_wide.py``): scalar
+``join.py`` and Q8 as the raw-SQL surface in ``tpch_wide.py``): scalar
 max-of-aggregate selection (Q15), correlated scalar subquery against a
 per-group average (Q17), HAVING-thresholded semi-join chain (Q20), and
 the double EXISTS / NOT-EXISTS "only late supplier" pattern (Q21).

@@ -528,7 +528,7 @@ def q_regression_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     covariance and Pearson r — all single-pass partial+final moment
     aggregates (no self-join, no window), bit-compatible with DuckDB's
     regr_* family after rounding."""
-    from velox_hadoop_spark.operators.stats2 import safe_corr
+    from velox_hadoop_spark.operators.stats import safe_corr
 
     li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(

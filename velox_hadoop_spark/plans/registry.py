@@ -101,23 +101,6 @@ def register(
     return deco
 
 
-def attach_oracle(name: str, sql: str) -> None:
-    """Late-bind (or replace) a registered query's oracle SQL.
-
-    For modules whose oracle text is assembled after the decorated
-    functions exist (e.g. shared CTE fragments built from several
-    helpers). Runs the SAME lint gate as :func:`register`, so the
-    lint-on-register invariant has one home regardless of when the
-    oracle arrives."""
-    from dataclasses import replace
-
-    if name not in _REGISTRY:
-        raise KeyError(f"attach_oracle: unknown query name: {name}")
-    if os.environ.get(_LINT_ENV) == "1":
-        _validate_oracle(name, sql)
-    _REGISTRY[name] = replace(_REGISTRY[name], oracle=sql)
-
-
 def _ensure_loaded() -> None:
     # Import every query-defining module exactly once; registration is a
     # side effect of import. Import order is also the verification-
@@ -128,7 +111,6 @@ def _ensure_loaded() -> None:
     import velox_hadoop_spark.operators.text  # noqa: F401
     import velox_hadoop_spark.operators.agg  # noqa: F401
     import velox_hadoop_spark.operators.join  # noqa: F401
-    import velox_hadoop_spark.operators.join2  # noqa: F401
     import velox_hadoop_spark.operators.skew  # noqa: F401
     import velox_hadoop_spark.operators.sort  # noqa: F401
     import velox_hadoop_spark.operators.window  # noqa: F401
@@ -156,31 +138,16 @@ def _ensure_loaded() -> None:
     import velox_hadoop_spark.operators.mining  # noqa: F401
     import velox_hadoop_spark.sources.multisource  # noqa: F401
     import velox_hadoop_spark.operators.subqueries  # noqa: F401
-    import velox_hadoop_spark.operators.reshape2  # noqa: F401
-    import velox_hadoop_spark.operators.funcs2  # noqa: F401
     import velox_hadoop_spark.operators.llmops2  # noqa: F401
-    import velox_hadoop_spark.operators.timeseries2  # noqa: F401
     import velox_hadoop_spark.operators.sqlbreadth  # noqa: F401
-    import velox_hadoop_spark.operators.timeseries3  # noqa: F401
     import velox_hadoop_spark.operators.llmops3  # noqa: F401
-    import velox_hadoop_spark.operators.stats2  # noqa: F401
+    import velox_hadoop_spark.operators.stats  # noqa: F401
     import velox_hadoop_spark.operators.semistruct  # noqa: F401
-    import velox_hadoop_spark.operators.sqlbreadth2  # noqa: F401
     import velox_hadoop_spark.operators.llmops4  # noqa: F401
-    import velox_hadoop_spark.operators.timeseries4  # noqa: F401
-    import velox_hadoop_spark.operators.contamination2  # noqa: F401
-    import velox_hadoop_spark.operators.dedup2  # noqa: F401
-    import velox_hadoop_spark.operators.stats3  # noqa: F401
     import velox_hadoop_spark.operators.llmops5  # noqa: F401
-    import velox_hadoop_spark.operators.sqlbreadth3  # noqa: F401
     import velox_hadoop_spark.operators.spanremoval  # noqa: F401
     import velox_hadoop_spark.operators.llmops6  # noqa: F401
     import velox_hadoop_spark.operators.sketches  # noqa: F401
-    import velox_hadoop_spark.operators.timeseries5  # noqa: F401
-    import velox_hadoop_spark.operators.stats4  # noqa: F401
-    import velox_hadoop_spark.operators.retrieval2  # noqa: F401
-    import velox_hadoop_spark.operators.graph2  # noqa: F401
-    import velox_hadoop_spark.operators.sqlbreadth4  # noqa: F401
     import velox_hadoop_spark.operators.llmops7  # noqa: F401
     import velox_hadoop_spark.operators.llmops8  # noqa: F401
     import velox_hadoop_spark.operators.llmops9  # noqa: F401
